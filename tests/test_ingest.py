@@ -7,6 +7,7 @@ import zipfile
 import pytest
 from pyspark.sql import functions as F
 
+from tpg_weather_etl_spark.functions.time import month_key
 from tpg_weather_etl_spark.ingest.gtfs import ingest_gtfs
 from tpg_weather_etl_spark.ingest.istdaten import (
     dedupe_istdaten,
@@ -24,7 +25,7 @@ from tpg_weather_etl_spark.sources.staging import (
 )
 from tpg_weather_etl_spark.sources.writers import (
     upsert_station_range,
-    write_month_partitioned,
+    write_partitioned,
 )
 from tpg_weather_etl_spark.schemas import IST_COLMAP, WEATHER_COLMAP
 
@@ -94,19 +95,37 @@ def test_istdaten_dedupe_deterministic_on_exact_ties(spark, tmp_path):
     assert winners == {"A"}  # H2: tiebreak on stop_name asc, stable
 
 
+def _write_months(df, out):
+    """The silver layout: ``month=YYYY-MM/`` from ``service_date``."""
+    write_partitioned(
+        df.withColumn("month", month_key(F.col("service_date"))), out, "month")
+
+
 def test_month_partitioned_overwrite_only_touches_present_months(spark, tmp_path):
-    out = tmp_path / "silver"
-    d1 = spark.createDataFrame(
-        [("2024-01-05", 1), ("2024-02-05", 2)], "service_date string, v int"
-    ).withColumn("service_date", F.to_date("service_date"))
-    write_month_partitioned(d1, out)
-    # second batch: only february, new value → january must survive
-    d2 = spark.createDataFrame(
-        [("2024-02-20", 99)], "service_date string, v int"
-    ).withColumn("service_date", F.to_date("service_date"))
-    write_month_partitioned(d2, out)
-    got = {(r.month, r.v) for r in spark.read.parquet(str(out)).collect()}
-    assert got == {("2024-01", 1), ("2024-02", 99)}
+    # dynamic overwrite is an option of the write itself: it must hold
+    # under a static session default and leave that default as it was
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    try:
+        for session_mode in ("dynamic", "static"):
+            spark.conf.set(key, session_mode)
+            out = tmp_path / f"silver_{session_mode}"
+            d1 = spark.createDataFrame(
+                [("2024-01-05", 1), ("2024-02-05", 2)],
+                "service_date string, v int"
+            ).withColumn("service_date", F.to_date("service_date"))
+            _write_months(d1, out)
+            # second batch: only february, new value → january must survive
+            d2 = spark.createDataFrame(
+                [("2024-02-20", 99)], "service_date string, v int"
+            ).withColumn("service_date", F.to_date("service_date"))
+            _write_months(d2, out)
+            got = {(r.month, r.v)
+                   for r in spark.read.parquet(str(out)).collect()}
+            assert got == {("2024-01", 1), ("2024-02", 99)}, session_mode
+            assert spark.conf.get(key) == session_mode
+    finally:
+        spark.conf.set(key, prev)
 
 
 WX_HEADER = ";".join(WEATHER_COLMAP.keys())
@@ -278,13 +297,12 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
 
 def test_month_partitioned_scan_prunes_partitions(spark, tmp_path):
     import datetime as _dt
-    from tpg_weather_etl_spark.sources.writers import write_month_partitioned
 
     rows = [(i, _dt.date(2024, 1 + (i % 3), 1 + i % 27), float(i))
             for i in range(300)]
     df = spark.createDataFrame(rows, "id long, service_date date, v double")
     out = str(tmp_path / "mp")
-    write_month_partitioned(df, out)
+    _write_months(df, out)
     scan = spark.read.parquet(out).filter(F.col("month") == "2024-02")
     plan = scan._jdf.queryExecution().executedPlan().toString()
     # the month predicate must become a PartitionFilter on the scan —
@@ -292,43 +310,6 @@ def test_month_partitioned_scan_prunes_partitions(spark, tmp_path):
     # directory and reading the lake
     assert "PartitionFilters: [isnotnull(month" in plan, plan
     assert scan.count() == sum(1 for _, d, _v in rows if d.month == 2)
-
-
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    from tpg_weather_etl_spark.sources.writers import compact_parquet
-
-    out = tmp_path / "frag"
-    df = spark.range(0, 10000).withColumn("v", F.col("id") * 2)
-    df.repartition(64).write.parquet(str(out))  # 64 shards
-    n_before = len(list(out.rglob("*.parquet")))
-    assert n_before >= 64
-    before = sorted(r.id for r in spark.read.parquet(str(out)).collect())
-    compact_parquet(spark, out, target_file_mb=512)
-    n_after = len(list(out.rglob("*.parquet")))
-    assert n_after <= 2
-    after = sorted(r.id for r in spark.read.parquet(str(out)).collect())
-    assert before == after
-
-
-def test_write_sorted_total_order_across_files(spark, tmp_path):
-    from tpg_weather_etl_spark.sources.writers import write_sorted
-
-    out = tmp_path / "sorted"
-    df = spark.range(0, 5000).withColumn(
-        "k", (F.col("id") * 2654435761) % 100000)
-    write_sorted(df.select("k", "id"), out, ["k", "id"], num_partitions=8)
-    files = sorted(out.glob("part-*.parquet"))
-    assert len(files) > 1
-    # per-file [min,max] ranges must not overlap → total order
-    ranges = []
-    for f in files:
-        ks = [r.k for r in spark.read.parquet(str(f)).collect()]
-        assert ks == sorted(ks)          # sorted inside the file
-        if ks:
-            ranges.append((min(ks), max(ks)))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2                # disjoint across files
 
 
 def test_merge_schema_reads_evolved_shards(spark, tmp_path):
@@ -368,41 +349,6 @@ def test_narrow_projection_prunes_read_schema(spark):
     # text column is ~99% of the bytes and must not leave the footer
     assert "text" not in m[0], m[0]
     assert "doc_id" in m[0] and "lang" in m[0]
-
-
-def test_refresh_months_equals_full_rebuild(spark, tmp_path):
-    import datetime as _dt
-    from tpg_weather_etl_spark.sources.writers import (
-        refresh_months, write_month_partitioned)
-
-    def build(df):
-        return df.groupBy("service_date").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("v").alias("v_sum"))
-
-    def mkrows(seed, n):
-        return [(i, _dt.date(2024, 1 + (i + seed) % 3, 1 + i % 27),
-                 float(i * seed)) for i in range(n)]
-
-    v1 = spark.createDataFrame(mkrows(1, 200),
-                               "id long, service_date date, v double")
-    gold = tmp_path / "gold"
-    write_month_partitioned(build(v1), gold, date_col="service_date")
-
-    # february gets corrected data → refresh only that month
-    v2_feb = spark.createDataFrame(
-        [(i, _dt.date(2024, 2, 1 + i % 27), float(i * 7))
-         for i in range(300)],
-        "id long, service_date date, v double")
-    full_v2 = v1.filter(F.month("service_date") != 2).unionByName(v2_feb)
-    refreshed = refresh_months(spark, v2_feb, gold, build,
-                               date_col="service_date")
-    assert refreshed == ["2024-02"]
-
-    got = spark.read.parquet(str(gold)).drop("month")
-    want = build(full_v2)
-    assert sorted(map(tuple, got.collect())) == \
-        sorted(map(tuple, want.collect()))
 
 
 def test_aqe_splits_skewed_join(spark):
@@ -445,14 +391,13 @@ def test_aqe_splits_skewed_join(spark):
 
 def test_dynamic_partition_pruning_on_month_join(spark, tmp_path):
     import datetime as _dt
-    from tpg_weather_etl_spark.sources.writers import write_month_partitioned
 
     rows = [(i, _dt.date(2024, 1 + (i % 6), 1 + i % 27), float(i))
             for i in range(2000)]
     fact = spark.createDataFrame(
         rows, "id long, service_date date, v double")
     out = str(tmp_path / "fact")
-    write_month_partitioned(fact, out)
+    _write_months(fact, out)
 
     dim = spark.createDataFrame(
         [("2024-02", "febfeature"), ("2099-01", "unused")],
@@ -466,82 +411,3 @@ def test_dynamic_partition_pruning_on_month_join(spark, tmp_path):
     # filter (DPP) — at 100 TB this reads one month, not the lake
     assert "dynamicpruning" in plan.lower(), plan
     assert joined.count() == sum(1 for _, d, _v in rows if d.month == 2)
-
-
-def test_zorder_layout_clusters_both_dimensions(spark, tmp_path):
-    """Z-order vs single-column sort: with a leading-column sort, each
-    file spans (nearly) the full range of the SECOND column; the
-    Morton layout confines files in BOTH dimensions, which is what
-    lets parquet min/max stats prune two-dimensional slices."""
-    import glob
-
-    from tpg_weather_etl_spark.sources.tables import read_table
-    from tpg_weather_etl_spark.sources.writers import (
-        write_sorted,
-        write_zordered,
-    )
-
-    e = read_table(spark, "/root/testdata/sf0.01", "events").select(
-        "event_id", "user_id", "value").filter("value IS NOT NULL")
-    zdir, sdir = tmp_path / "zorder", tmp_path / "sorted"
-    write_zordered(e, zdir, ["user_id", "value"], num_partitions=64)
-    write_sorted(e, sdir, ["user_id"], num_partitions=64)
-
-    def mean_value_span(d):
-        spans = []
-        for f in glob.glob(str(d / "part-*.parquet")):
-            row = spark.read.parquet(f).agg(
-                F.min("value"), F.max("value")).collect()[0]
-            spans.append(row[1] - row[0])
-        return sum(spans) / len(spans)
-
-    z_span, s_span = mean_value_span(zdir), mean_value_span(sdir)
-    # rows preserved
-    assert spark.read.parquet(str(zdir)).count() == e.count()
-    # the user_id-sorted layout leaves value unclustered (each file
-    # spans ~the full value range no matter how many files); at 64
-    # files the Morton key gives ~3 bits per dimension, so per-file
-    # value spans shrink to ~1/8 of the range
-    assert z_span < 0.3 * s_span, (z_span, s_span)
-
-
-def test_read_jsonl_documents_fixed_schema_and_corrupt_lines(spark, tmp_path):
-    """JSONL reader: explicit schema (no inference pre-scan), corrupt
-    lines become null rows instead of failures or type flips."""
-    import json
-
-    from tpg_weather_etl_spark.sources.readers import read_jsonl_documents
-
-    p = tmp_path / "docs.jsonl"
-    p.write_text("\n".join([
-        json.dumps({"doc_id": 1, "text": "alpha beta", "lang": "en",
-                    "source": "web", "n_chars": 10}),
-        "{ this is not json",
-        json.dumps({"doc_id": 2, "text": "gamma", "lang": "fr",
-                    "source": "books", "n_chars": 5}),
-    ]))
-    df = read_jsonl_documents(spark, p)
-    assert [f.name for f in df.schema.fields] == \
-        ["doc_id", "text", "lang", "source", "n_chars"]
-    rows = df.collect()
-    assert len(rows) == 3
-    good = {r.doc_id for r in rows if r.doc_id is not None}
-    assert good == {1, 2}
-
-
-def test_orc_roundtrip_and_pushdown(spark, tmp_path):
-    from tpg_weather_etl_spark.sources.readers import read_orc
-    from tpg_weather_etl_spark.sources.tables import read_table
-    from tpg_weather_etl_spark.sources.writers import write_orc
-
-    docs = read_table(spark, "/root/testdata/sf0.001", "documents")
-    out = tmp_path / "docs_orc"
-    write_orc(docs, out)
-    back = read_orc(spark, out)
-    assert back.schema == docs.schema
-    assert back.count() == docs.count()
-    # predicate pushdown + column pruning reach the ORC scan
-    q = back.filter(F.col("doc_id") < 10).select("doc_id", "source")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "LessThan(doc_id,10)" in plan, plan
-    assert "ReadSchema: struct<doc_id:bigint,source:string>" in plan, plan

@@ -11,7 +11,6 @@ from tpg_weather_etl_spark.quality import (
     null_rates,
 )
 from tpg_weather_etl_spark.schemas import IST_COLMAP, WEATHER_COLMAP
-from tpg_weather_etl_spark.sources.writers import export_csv
 
 
 def test_null_rates(spark):
@@ -28,14 +27,6 @@ def test_assert_unique_key(spark):
     bad = spark.createDataFrame([(1,), (1,)], "k int")
     with pytest.raises(AssertionError):
         assert_unique_key(bad, ["k"])
-
-
-def test_export_csv_single_file(spark, tmp_path):
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-    export_csv(df, tmp_path / "out")
-    parts = list((tmp_path / "out").glob("part-*.csv"))
-    assert len(parts) == 1
-    assert "k,v" in parts[0].read_text()
 
 
 def _write_raw(tmp_path):

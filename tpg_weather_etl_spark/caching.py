@@ -193,11 +193,3 @@ def release_since(marker: int, blocking: bool = False) -> int:
     while _HANDLES and _HANDLES[-1][0] > marker:
         _HANDLES.pop()
     return n
-
-
-def cached_rdd_count(spark) -> int:
-    """Number of RDDs currently holding storage (for tests/monitoring)."""
-    return len([
-        i for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        if i.numCachedPartitions() > 0
-    ])

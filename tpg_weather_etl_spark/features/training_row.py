@@ -33,10 +33,6 @@ from tpg_weather_etl_spark.functions.time import (
 _DAY_US = 86_400 * 1_000_000
 
 
-def _rolling_median(days: int) -> F.Column:
-    return F.expr("percentile(delay_depart_sec, 0.5)")
-
-
 def build_training_rows(
     features_events: DataFrame,
     weather: DataFrame,
@@ -79,15 +75,11 @@ def build_training_rows(
 
     # W3: rolling medians over trailing windows per (line, stop); frame
     # excludes the current day's value leaking: range up to -1 µs.
-    base_w = (
-        Window.partitionBy("line_text", "stop_code")
-        .orderBy(epoch_us(F.col("ts_event")))
-    )
     for days in (7, 14, 28):
         ev = ev.withColumn(
             f"med_delay_{days}d_sec",
-            _rolling_median(days).over(
-                base_w.rangeBetween(-days * _DAY_US, -1)
+            F.expr("percentile(delay_depart_sec, 0.5)").over(
+                tw.rangeBetween(-days * _DAY_US, -1)
             ).cast("int"),  # DDL common.py:185-187 declares INT
         )
 

@@ -25,9 +25,7 @@ from tpg_weather_etl_spark.sources.readers import ensure_columns, read_gtfs_csv
 from tpg_weather_etl_spark.sources.staging import (
     read_csv_from_zip_member,
 )
-from tpg_weather_etl_spark.sources.writers import (
-    write_feed_version_partitioned,
-)
+from tpg_weather_etl_spark.sources.writers import write_partitioned
 
 DEFAULT_OPERATOR_PATTERN = "Transports Publics Genevois"
 
@@ -126,5 +124,5 @@ def ingest_gtfs(
         ).dropDuplicates().withColumn("feed_version", fv),
     }
     for name, df in out.items():
-        write_feed_version_partitioned(df, Path(warehouse_dir) / name)
+        write_partitioned(df, Path(warehouse_dir) / name, "feed_version")
     return out

@@ -23,10 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tpg_weather_etl_spark.functions.macros import robust_bool, status_rank
+from tpg_weather_etl_spark.functions.time import month_key
 from tpg_weather_etl_spark.operators.dedupe import priority_dedupe
 from tpg_weather_etl_spark.schemas import IST_COLMAP
 from tpg_weather_etl_spark.sources.readers import read_semicolon_csv
-from tpg_weather_etl_spark.sources.writers import write_month_partitioned
+from tpg_weather_etl_spark.sources.writers import write_partitioned
 
 # dd.MM.yyyy HH:mm[:ss] day-first parse with coerce-to-NULL (ref F1,
 # 02:247-249): try seconds format first, then minutes-only.
@@ -132,5 +133,7 @@ def ingest_istdaten(
     """
     raw = read_semicolon_csv(spark, csv_paths, usecols=list(IST_COLMAP))
     events = dedupe_istdaten(normalize_istdaten(raw, operator_abbr))
-    write_month_partitioned(events, silver_path, date_col="service_date")
+    write_partitioned(
+        events.withColumn("month", month_key(F.col("service_date"))),
+        silver_path, "month")
     return events

@@ -132,8 +132,7 @@ def write_ivf_index(
     This is what makes IVF an *index* rather than a per-query
     computation: probing nprobe cells becomes a partition-pruned scan
     (``PartitionFilters: [cell IN (...)]``) that reads nprobe/k of the
-    corpus from disk and nothing else. Combine with ``write_sorted``
-    inside each cell for row-group pruning on secondary keys.
+    corpus from disk and nothing else.
     """
     (assignments.write.mode("overwrite")
      .option("compression", "zstd")

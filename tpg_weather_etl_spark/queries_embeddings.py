@@ -1358,11 +1358,6 @@ def _data_signature(cache_key: str | None) -> tuple:
 _CENTROID_DF_MEMO: dict[tuple, tuple] = {}
 
 
-def clear_centroid_memo() -> None:
-    _CENTROID_MEMO.clear()
-    _CENTROID_DF_MEMO.clear()
-
-
 def _parquet_glob(sf_dir: str, table: str) -> str:
     """read_parquet-able path for ``<sf_dir>/<table>.parquet``: the
     driver testdata ships single files, Spark-written fixtures are

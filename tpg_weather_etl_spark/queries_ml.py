@@ -36,16 +36,6 @@ BOILER_HOT_SHARE = 0.3
 # Token table (shared): one row per (doc_id, token) with counts
 # ---------------------------------------------------------------------------
 
-def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    return d.select(
-        "doc_id",
-        F.explode(F.split(norm_text(F.col("text")), " ")).alias("tok"),
-    )
-
-
 def token_counts_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted (doc_id, tok, tf) per-document token counts — the
     shared reuse point of the whole unigram family (optimization r14

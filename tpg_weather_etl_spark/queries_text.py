@@ -268,12 +268,6 @@ def _shingle_df_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shingle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _shingle_df(spark, sf_dir).groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_sh")
-    )
-
-
 def _pair_jaccard(shingles: DataFrame, counts: DataFrame | None = None,
                   cand: DataFrame | None = None,
                   reduce_once: bool = False,

@@ -6,40 +6,17 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from tpg_weather_etl_spark import queries_relational
+from tpg_weather_etl_spark import (
+    queries_embeddings,
+    queries_ml,
+    queries_multimodal,
+    queries_relational,
+    queries_scalar,
+    queries_text,
+)
 
-_MODULES = [queries_relational]
-_IMPORT_FAILURES: list[str] = []
-
-try:  # text/similarity gate lands after the relational core
-    from tpg_weather_etl_spark import queries_text
-    _MODULES.append(queries_text)
-except ImportError:
-    _IMPORT_FAILURES.append("queries_text")
-
-try:
-    from tpg_weather_etl_spark import queries_embeddings
-    _MODULES.append(queries_embeddings)
-except ImportError:
-    _IMPORT_FAILURES.append("queries_embeddings")
-
-try:
-    from tpg_weather_etl_spark import queries_scalar
-    _MODULES.append(queries_scalar)
-except ImportError:
-    _IMPORT_FAILURES.append("queries_scalar")
-
-try:
-    from tpg_weather_etl_spark import queries_ml
-    _MODULES.append(queries_ml)
-except ImportError:
-    _IMPORT_FAILURES.append("queries_ml")
-
-try:
-    from tpg_weather_etl_spark import queries_multimodal
-    _MODULES.append(queries_multimodal)
-except ImportError:
-    _IMPORT_FAILURES.append("queries_multimodal")
+_MODULES = [queries_relational, queries_text, queries_embeddings,
+            queries_scalar, queries_ml, queries_multimodal]
 
 
 # The driver caps each round at 50 checked queries of the registry,
@@ -266,18 +243,12 @@ def _validate_ordering(query_keys: set[str]) -> None:
     # A typo in the hand-maintained ordering lists would silently land
     # a query in the unordered middle — fail loudly instead. Validated
     # against the QUERY key set (oracles are a subset: no-oracle
-    # queries get a rows-only check and have no ORACLE entry). Only
-    # enforced when every gate module imported: with a module missing,
-    # its names are legitimately absent and a hard assert would turn
-    # that partial degradation into total registry failure.
+    # queries get a rows-only check and have no ORACLE entry).
     # raise, not assert: `python -O` strips asserts and a typo here
     # would silently demote a query to the unordered middle.
-    if not _IMPORT_FAILURES:
-        unknown = (set(_RUN_FIRST) | set(_RUN_MID) | set(_RUN_LAST)
-                   ) - query_keys
-        if unknown:
-            raise ValueError(
-                f"registry ordering names unknown queries: {unknown}")
+    unknown = (set(_RUN_FIRST) | set(_RUN_MID) | set(_RUN_LAST)) - query_keys
+    if unknown:
+        raise ValueError(f"registry ordering names unknown queries: {unknown}")
     for a, b in (("_RUN_FIRST", "_RUN_MID"), ("_RUN_FIRST", "_RUN_LAST"),
                  ("_RUN_MID", "_RUN_LAST")):
         dup = set(globals()[a]) & set(globals()[b])

@@ -8,8 +8,10 @@ DuckDB PRAGMAs (reference: src/common.py:36-87):
 - AQE on (runtime re-planning replaces the reference's hand tuning
   of ``PRAGMA threads`` / morsel parallelism)
 - zstd parquet (reference gold outputs use ZSTD: 10_build_features.py:294)
-- dynamic partition overwrite (replaces the reference's per-month
-  DELETE+INSERT transactions: 02_ingest_istdaten.py:476-504)
+
+Dynamic partition overwrite (the reference's per-month DELETE+INSERT
+transactions, 02_ingest_istdaten.py:476-504) is an option of each
+partitioned write (sources/writers.py), not a session setting.
 
 At cluster scale the same factory applies; only ``master`` and the
 memory/shuffle sizing change. Nothing here is local-mode specific.
@@ -39,7 +41,6 @@ _BASE_CONF: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.parquet.compression.codec": "zstd",
-    "spark.sql.sources.partitionOverwriteMode": "dynamic",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.files.maxPartitionBytes": "134217728",
@@ -104,7 +105,6 @@ def apply_session_defaults(spark: SparkSession) -> SparkSession:
     for key in (
         "spark.sql.session.timeZone",
         "spark.sql.adaptive.enabled",
-        "spark.sql.sources.partitionOverwriteMode",
         "spark.sql.parquet.inferTimestampNTZ.enabled",
     ):
         try:

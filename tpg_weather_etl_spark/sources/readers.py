@@ -54,12 +54,6 @@ def read_gtfs_csv(spark: SparkSession, path: str | Path) -> DataFrame:
     )
 
 
-def read_parquet_shards(spark: SparkSession,
-                        paths: Sequence[str | Path]) -> DataFrame:
-    """Multi-shard parquet read = implicit UNION ALL (ref S8)."""
-    return spark.read.parquet(*[str(p) for p in paths])
-
-
 def ensure_columns(
     df: DataFrame,
     required: Sequence[str],
@@ -77,28 +71,6 @@ def ensure_columns(
         if c not in df.columns:
             df = df.withColumn(c, F.lit(None).cast(T.StringType()))
     return df
-
-
-def read_jsonl_documents(spark: SparkSession, path: str | Path) -> DataFrame:
-    """Batch JSONL (one JSON object per line) documents reader — the
-    crawl-dump interchange format, with the explicit schema from the
-    streaming twin (streaming/corpus_dedup.py) so corrupt lines
-    surface as nulls under PERMISSIVE mode instead of silently
-    switching the frame to schema inference (which at 100 TB costs a
-    full pre-scan AND lets one malformed shard change column types).
-    """
-    from tpg_weather_etl_spark.streaming.corpus_dedup import DOC_SCHEMA
-
-    return (
-        spark.read.schema(DOC_SCHEMA)
-        .option("mode", "PERMISSIVE")
-        .json(str(path))
-    )
-
-
-def read_orc(spark: SparkSession, path: str | Path) -> DataFrame:
-    """ORC scan — pushdown/pruning verified in tests/test_ingest."""
-    return spark.read.orc(str(path))
 
 
 def read_media_dir(spark: SparkSession, path: str | Path,

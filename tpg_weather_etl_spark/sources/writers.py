@@ -1,4 +1,5 @@
-"""Parquet sinks & upserts (reference K1-K7).
+"""Parquet sinks & upserts (reference K1-K6; the K7 CSV download is
+built in pandas by the dashboard, app/streamlit_app.py).
 
 The reference's transactional DELETE+INSERT upserts against DuckDB
 become partition-layout operations on a parquet lake:
@@ -24,64 +25,28 @@ from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tpg_weather_etl_spark.functions.time import month_key
 
-
-def write_parquet(df: DataFrame, path: str | Path, mode: str = "overwrite",
-                  compression: str = "zstd") -> None:
+def write_parquet(df: DataFrame, path: str | Path) -> None:
     """Plain parquet sink (K1/K3); zstd matches the reference gold
     outputs (10_build_features.py:294)."""
-    df.write.mode(mode).option("compression", compression).parquet(str(path))
+    df.write.mode("overwrite").option("compression", "zstd").parquet(str(path))
 
 
-def write_month_partitioned(
-    df: DataFrame,
-    path: str | Path,
-    date_col: str = "service_date",
-    overwrite_partitions: bool = True,
-) -> None:
-    """Hive-style ``month=YYYY-MM/`` sink with dynamic overwrite
-    (K2+K5). Only months present in ``df`` are replaced."""
-    out = df.withColumn("month", month_key(F.col(date_col)))
-    mode = "overwrite" if overwrite_partitions else "append"
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (out.write.mode(mode)
-            .option("compression", "zstd")
-            .partitionBy("month")
-            .parquet(str(path)))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+def write_partitioned(df: DataFrame, path: str | Path, by: str) -> None:
+    """Hive-style ``<by>=<value>/`` sink that replaces only the
+    partitions present in ``df``: ``month`` for the silver events
+    (K2+K5), ``feed_version`` for GTFS (K4, 01_ingest_gtfs.py:237-270).
 
-
-def write_feed_version_partitioned(df: DataFrame, path: str | Path) -> None:
-    """K4: feed_version-scoped overwrite (01_ingest_gtfs.py:237-270)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (df.write.mode("overwrite")
-           .option("compression", "zstd")
-           .partitionBy("feed_version")
-           .parquet(str(path)))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def export_csv(df: DataFrame, path: str | Path,
-               single_file: bool = True) -> None:
-    """K7: CSV export (dashboard download, app/streamlit_app.py:219-225).
-
-    ``single_file`` coalesces to one partition — only for small,
-    human-facing extracts; bulk exports keep natural partitioning.
-    """
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("header", "true").csv(str(path))
+    Dynamic overwrite is an option of this write alone: the session's
+    overwrite-mode setting is neither read nor changed."""
+    (df.write.mode("overwrite")
+       .option("compression", "zstd")
+       .option("partitionOverwriteMode", "dynamic")
+       .partitionBy(by)
+       .parquet(str(path)))
 
 
 def upsert_station_range(
@@ -270,170 +235,3 @@ def repair_orphaned_table(
     spark.sql(f"CREATE TABLE {table} ({cols}) USING parquet"
               f"{clustered} LOCATION '{loc}'")
     return True
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str | Path,
-    target_file_mb: int = 512,
-) -> int:
-    """Rewrite a parquet directory into ~``target_file_mb`` files —
-    the small-files maintenance op every streaming/append lake needs
-    (thousands of KB-sized files turn scans into open/seek storms and
-    blow up driver file listings).
-
-    Sizes from the on-disk footprint, not row counts, so compaction is
-    schema-agnostic. Returns the new file count. At cluster scale the
-    same routine runs per partition directory; a transactional format
-    (Delta/Iceberg OPTIMIZE) replaces the staging rename.
-    """
-    path = Path(path)
-    total_bytes = sum(f.stat().st_size
-                      for f in path.rglob("*.parquet"))
-    n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(str(path))
-    staging = path.with_name(path.name + "__compacting")
-    (df.repartition(n_files).write.mode("overwrite")
-       .option("compression", "zstd").parquet(str(staging)))
-    import shutil
-    backup = path.with_name(path.name + "__precompact")
-    path.rename(backup)
-    staging.rename(path)
-    shutil.rmtree(backup)
-    return n_files
-
-
-def write_sorted(
-    df: DataFrame,
-    path: str | Path,
-    sort_cols: list[str],
-    num_partitions: int | None = None,
-) -> None:
-    """Globally range-sorted parquet output: ``repartitionByRange`` +
-    ``sortWithinPartitions`` gives a total order across files (file i
-    holds keys below file i+1, rows sorted inside) WITHOUT funneling
-    through one task the way ``coalesce(1).orderBy`` would.
-
-    Why it matters at scale: sorted layout gives parquet min/max row-
-    group statistics real pruning power — a key-range scan touches one
-    file instead of all of them (the poor man's clustered index).
-    """
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    (df.repartitionByRange(n, *sort_cols)
-       .sortWithinPartitions(*sort_cols)
-       .write.mode("overwrite")
-       .option("compression", "zstd").parquet(str(path)))
-
-
-ZORDER_BITS = 8   # per-dimension resolution: 2^8 buckets → 16-bit key
-
-
-def zorder_key(df: DataFrame, cols: list[str],
-               bits: int = ZORDER_BITS) -> Column:
-    """Morton (Z-order) key over two numeric columns.
-
-    Each column is bucketed into 2^bits rank buckets via
-    approxQuantile boundaries (a bounded driver-side list — rank
-    bucketing, unlike width_bucket's uniform split, stays balanced
-    under skew), then the bucket ids' bits interleave into one
-    integer. Sorting by that integer clusters rows that are close in
-    BOTH dimensions into the same files/row-groups — the multi-column
-    locality a single-column sort cannot give.
-    """
-    if len(cols) != 2:
-        raise ValueError("zorder_key supports exactly two columns")
-    n_buckets = 1 << bits
-    bucket_exprs = []
-    for c in cols:
-        qs = df.selectExpr(f"CAST({c} AS DOUBLE) AS v").approxQuantile(
-            "v", [i / n_buckets for i in range(1, n_buckets)], 0.001
-        )
-        bounds = F.array(*[F.lit(float(b)) for b in qs])
-        # bucket = #boundaries strictly below the value (0..2^bits-1)
-        bucket_exprs.append(
-            F.aggregate(
-                bounds, F.lit(0),
-                lambda acc, b: acc + (F.col(c).cast("double") > b)
-                .cast("int"),
-            )
-        )
-    a, b = bucket_exprs
-    z = F.lit(0)
-    for i in range(bits):
-        z = (
-            z.bitwiseOR(F.shiftleft(F.shiftright(a, i).bitwiseAND(F.lit(1)),
-                                    2 * i + 1))
-            .bitwiseOR(F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)),
-                                   2 * i))
-        )
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str | Path,
-    cols: list[str],
-    num_partitions: int | None = None,
-) -> None:
-    """Z-order clustered parquet output: range-partition and sort by
-    the Morton key of two columns, so parquet min/max statistics
-    prune scans filtered on EITHER (or both) dimensions —
-    ``write_sorted`` gives that power on the leading column only.
-    The layout technique behind lakehouse OPTIMIZE ZORDER BY,
-    expressed as plain Spark."""
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    z = zorder_key(df, cols)
-    (df.withColumn("__z", z)
-       .repartitionByRange(n, "__z")
-       .sortWithinPartitions("__z")
-       .drop("__z")
-       .write.mode("overwrite")
-       .option("compression", "zstd").parquet(str(path)))
-
-
-def refresh_months(
-    spark: SparkSession,
-    source: DataFrame,
-    gold_path: str | Path,
-    build: "callable",
-    months: list[str] | None = None,
-    date_col: str = "service_date",
-) -> list[str]:
-    """Incremental gold maintenance: rebuild ONLY the given months of
-    a month-partitioned aggregate (default: the months present in
-    ``source``) and dynamic-overwrite exactly those partitions.
-
-    ``build`` maps a month-filtered source DataFrame to its gold rows
-    (the same function a full rebuild uses — incremental refresh must
-    never have its own aggregation logic to drift). At 100 TB this is
-    the difference between touching one month's partitions and
-    recomputing the lake; correctness holds because monthly aggregates
-    depend only on that month's rows (partition-aligned computation).
-    Returns the refreshed month keys.
-    """
-    src_m = source.withColumn("month", month_key(F.col(date_col)))
-    if months is None:
-        months = [r.month for r in src_m.select("month").distinct().collect()]
-    subset = src_m.filter(F.col("month").isin(months)).drop("month")
-    out = build(subset).withColumn("month", month_key(F.col(date_col)))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (out.write.mode("overwrite")
-            .option("compression", "zstd")
-            .partitionBy("month")
-            .parquet(str(gold_path)))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return sorted(months)
-
-
-def write_orc(df: DataFrame, path: str | Path, mode: str = "overwrite",
-              compression: str = "zlib") -> None:
-    """ORC sink — the second columnar format Spark writes natively.
-    Same role as the parquet gold sink (predicate pushdown, column
-    pruning, stripe-level min/max skipping) for warehouses
-    standardized on ORC/Hive."""
-    df.write.mode(mode).option("compression", compression).orc(str(path))
