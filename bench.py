@@ -308,11 +308,13 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     samples_map: dict[str, list[float]] = {}
-    # Cold-vs-warm honesty annotation (optimization r15, VERDICT r14
-    # item 8): per query, how many shared cache registrations
-    # (persists + result handles) it left LIVE for later queries — the
-    # query that PAID each family's cache build in this sweep. Rides
-    # only in the full record; no timing change.
+    # Cold-vs-warm annotation (optimization r15, VERDICT r14 item 8):
+    # per query, how many tracked registrations (persists + result
+    # handles) it left LIVE after it ran. That counts every tracked
+    # persist the query left behind, its private intermediates
+    # included, not only the shared family builds later queries read,
+    # so a nonzero count does not by itself mean the query paid a
+    # shared build. Rides only in the full record; no timing change.
     cache_builds: dict[str, int] = {}
     failure: str | None = None
     try:
@@ -367,10 +369,11 @@ def main() -> None:
         # holds; the samples let a reader audit a suspect median).
         "repeat": {"n": REPEAT, "min_sec": REPEAT_MIN_SEC},
         "samples": samples_map,
-        # which queries paid a shared cache build this sweep (count of
-        # live persist/handle registrations they created) — their
-        # recorded time is cold build+consume; family members after
-        # them read warm (VERDICT r14 item 8)
+        # per query, the count of tracked persist/handle
+        # registrations it left live (VERDICT r14 item 8): shared
+        # family builds AND the query's private persists, so a query
+        # listed here may or may not have paid a build that later
+        # family members read warm
         "cache_builds": cache_builds,
     }
     if ACCEPTED_REGRESSIONS:

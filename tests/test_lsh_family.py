@@ -19,8 +19,12 @@ half-hour stress probe.
 
 from __future__ import annotations
 
-import numpy as np
+from pathlib import Path
 
+import numpy as np
+import pytest
+
+from tests.test_plan_lint import SF_DIR
 from tpg_weather_etl_spark.queries_embeddings import (
     EMB_DIM,
     JL_DIM,
@@ -135,3 +139,108 @@ def test_mh_reduce_once_threshold(spark, tmp_path):
     docs.write.mode("overwrite").parquet(
         str(tmp_path / "documents.parquet"))
     assert _mh_reduce_once(spark, str(tmp_path)) is False
+
+
+@pytest.fixture(scope="module")
+def _need_testdata():
+    if not Path(SF_DIR).exists():
+        pytest.skip("sf0.001 testdata not present")
+
+
+def test_kmeans_ivf_recall_vs_brute_force(spark, _need_testdata):
+    from tpg_weather_etl_spark.queries_embeddings import (
+        IVF_TOPK,
+        q_embedding_topk,
+        q_kmeans_ivf_topk,
+    )
+
+    exact = {}
+    for r in q_embedding_topk(spark, SF_DIR).collect():
+        if r.rank <= IVF_TOPK:
+            exact.setdefault(r.qid, set()).add(r.vec_id)
+    approx = {}
+    for r in q_kmeans_ivf_topk(spark, SF_DIR).collect():
+        approx.setdefault(r.qid, set()).add(r.vec_id)
+
+    # recall@3 over the query set: the trained quantizer must place
+    # the true neighbors in probed cells for >=80% of (query, hit)s
+    hits = sum(len(exact[q] & approx.get(q, set())) for q in exact)
+    total = sum(len(v) for v in exact.values())
+    assert total > 0
+    assert hits / total >= 0.8, f"recall {hits}/{total}"
+
+
+def test_multi_table_neardup_superset_and_candidates(spark, _need_testdata):
+    from pyspark.sql import functions as F
+
+    from tpg_weather_etl_spark.queries_embeddings import (
+        _bucketed,
+        _bucketed_multi,
+        q_embedding_neardup,
+        q_embedding_neardup_multi,
+    )
+
+    single = {(r.vec_a, r.vec_b)
+              for r in q_embedding_neardup(spark, SF_DIR).collect()}
+    multi = {(r.vec_a, r.vec_b)
+             for r in q_embedding_neardup_multi(spark, SF_DIR).collect()}
+    # more tables can only ADD candidate pairs; the cosine verify is
+    # identical, so multi-table recall dominates single-table
+    assert single <= multi
+
+    def n_cand(bkt, keys):
+        a = bkt.select(F.col("vec_id").alias("a"), *keys)
+        b = bkt.select(F.col("vec_id").alias("b"),
+                       *[F.col(k).alias(f"{k}_b") for k in keys])
+        cond = F.col("a") < F.col("b")
+        for k in keys:
+            cond = cond & (F.col(k) == F.col(f"{k}_b"))
+        return a.join(b, cond).select("a", "b").distinct().count()
+
+    c1 = n_cand(_bucketed(spark, SF_DIR), ["bucket"])
+    cm = n_cand(_bucketed_multi(spark, SF_DIR), ["tbl", "bucket"])
+    # L tables inspect more candidates (union over tables) but stay
+    # far below the n^2 cross join
+    n = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()
+    assert c1 <= cm < n * (n - 1) / 2
+
+
+def test_hot_band_bucket_cap_binding_and_inert(spark):
+    """filter_hot_band_buckets: inert when no bucket exceeds the cap;
+    drops the mega-bucket (and its quadratic pair blob) when one
+    does — the text-side analogue of the embedding family's
+    filter_hot_buckets (round-9 probe find: boilerplate-heavy corpora
+    grow one shared header bucket per band linearly with the corpus,
+    so uncapped candidates grow quadratically)."""
+    from pyspark.sql import functions as F
+
+    from tpg_weather_etl_spark.queries_text import (
+        bands_from_shingles,
+        filter_hot_band_buckets,
+        shingles_from_docs,
+    )
+
+    # 12 identical docs -> every band bucket holds all 12
+    body = " ".join(f"w{i}" for i in range(30))
+    rows = [(i, body) for i in range(12)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    bands = bands_from_shingles(shingles_from_docs(docs))
+
+    capped_inert = filter_hot_band_buckets(bands, cap=50)
+    assert capped_inert.count() == bands.count()  # inert above size
+
+    capped = filter_hot_band_buckets(bands, cap=5)
+    assert capped.count() == 0  # the mega-bucket is dropped whole
+
+    # mixed corpus: mega-cluster + 3 small near-dup pairs -> cap keeps the
+    # small buckets intact while dropping only the hot one
+    rows2 = rows + [(100 + i, " ".join(f"p{i}_{j}" for j in range(30)))
+                    for i in range(3)]
+    rows2 += [(200 + i, " ".join(f"p{i}_{j}" for j in range(29)) + " zz")
+              for i in range(3)]
+    docs2 = spark.createDataFrame(rows2, "doc_id long, text string")
+    bands2 = bands_from_shingles(shingles_from_docs(docs2))
+    kept = filter_hot_band_buckets(bands2, cap=5)
+    kept_docs = {r.doc_id for r in kept.select("doc_id").distinct().collect()}
+    assert not kept_docs & set(range(12))
+    assert {100, 101, 102, 200, 201, 202} <= kept_docs

@@ -15,6 +15,8 @@ vs salted branch (queries_ml._oriented_triangles), so building those
 three plans executes a small job and requires sf0.001 data to exist —
 which this suite (and every other caller: the driver gate, bench,
 check_oracle) always has.
+The same test also fails a query whose construction writes session
+conf (`spark.conf.set`/`unset`): queries share the caller's session.
 Fewer exchanges than budgeted passes — run
 `python tools/update_plan_budgets.py` to ratchet the budget down (or,
 after review, to accept a deliberate increase).
@@ -51,7 +53,7 @@ def _clean_cache_baseline(spark):
     # query CONSTRUCTION (e.g. cluster_split building the minhash
     # edge cache) would substitute InMemoryRelations into matching
     # subtrees and shift exchange counts with registry order
-    # (observed: test_lsh_ml's minhash run changing
+    # (observed: an earlier test's minhash run changing
     # containment_pairs' plan; round 6: cluster_split doing the same
     # to every alphabetically-later shingle query). Clear both layers
     # before every single budget check so budgets are canonical.
@@ -74,13 +76,28 @@ def _clean_cache_baseline(spark):
 
 
 @pytest.mark.parametrize("name", _names())
-def test_shuffle_count_within_budget(spark, name):
+def test_shuffle_count_within_budget(spark, name, monkeypatch):
     if name not in BUDGETS:
         pytest.skip("covered by test_every_query_has_a_budget")
+    from pyspark.sql.conf import RuntimeConfig
+
     from tpg_weather_etl_spark.plans.audit import count_exchanges
     from tpg_weather_etl_spark.registry import all_queries
 
+    # Queries share one session, so building a plan (which runs the
+    # eager CC/PageRank loops) must not write its conf. Record every
+    # set/unset made while the plan is built; the fixture's own
+    # shuffle.partitions pin above runs before recording starts.
+    writes = []
+    for method in ("set", "unset"):
+        def record(self, key, *args, _orig=getattr(RuntimeConfig, method),
+                   _method=method):
+            writes.append((_method, key))
+            return _orig(self, key, *args)
+        monkeypatch.setattr(RuntimeConfig, method, record)
     n = count_exchanges(all_queries()[name](spark, SF_DIR))
+    monkeypatch.undo()
+    assert not writes, f"{name} wrote session conf: {writes}"
     assert n <= BUDGETS[name], (
         f"{name}: plan now has {n} shuffle exchanges, budget is "
         f"{BUDGETS[name]} — a new shuffle appeared. If intentional, "

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -671,3 +671,39 @@ def test_deterministic_sample_capped_properties(spark, keys, pct, cap,
         [k for k in keys if (lcg(k) * 100) // LCG_M < pct],
         key=lambda k: (lcg(k), k))[:cap]
     assert got == sorted(expect)
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(docs=st.lists(
+    st.frozensets(st.integers(min_value=0, max_value=11),
+                  min_size=1, max_size=8),
+    min_size=2, max_size=8))
+# boundary: |A| = 2, B ⊃ A with |B| = 4 gives J = 0.5 exactly, and the
+# size-ratio prefilter must keep it (min = tau·max)
+@example(docs=[frozenset({0, 1}), frozenset({0, 1, 2, 3})])
+def test_pair_jaccard_tau_prefilter_is_sound(spark, docs):
+    """The `tau` size-ratio prefilter in `_pair_jaccard` drops only
+    pairs that a `jaccard >= tau` filter would drop anyway: on any
+    shingle sets, filtered output with and without `tau` is equal."""
+    from tpg_weather_etl_spark.queries_text import _pair_jaccard
+
+    sh = spark.createDataFrame(
+        [(i, h) for i, s in enumerate(docs) for h in sorted(s)],
+        "doc_id long, sh_hash long")
+    cand = spark.createDataFrame(
+        [(a, b) for a in range(len(docs)) for b in range(a + 1, len(docs))],
+        "doc_a long, doc_b long")
+
+    def kept(tau):
+        out = _pair_jaccard(sh, cand=cand, tau=tau)
+        return sorted(
+            (r.doc_a, r.doc_b, r.n_inter, r.jaccard)
+            for r in out.filter(F.col("jaccard") >= 0.5).collect())
+
+    with_tau = kept(0.5)
+    assert with_tau == kept(None)
+    want = sorted(
+        (a, b) for a in range(len(docs)) for b in range(a + 1, len(docs))
+        if len(docs[a] & docs[b]) / len(docs[a] | docs[b]) >= 0.5)
+    assert [(a, b) for a, b, _, _ in with_tau] == want

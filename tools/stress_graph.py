@@ -18,12 +18,6 @@ tools/stress_curation.py:
 - assert `_EDGE_ROWS_PER_PARTITION` sizing actually grows the loop
   partition count across tiers (the knob is load-bearing, not
   decorative);
-- record per-materialization-block PageRank wall time at every size
-  (`PAGERANK_ITER_TIMES`): within one run the blocks must stay flat —
-  growth would mean the loop is re-shuffling the edge list it claims
-  to have pre-partitioned (with the r15 fused loop the default
-  cadence yields one block; SPARK_GRAFT_PAGERANK_CHECKPOINT_EVERY=1
-  restores per-iteration probing);
 - time the CC pointer-jumping loop on the same graphs;
 - PLANTED-SKEW section (VERDICT r10 task 3): rebuild the mid tier
   with (a) one hub part added to ``--hub-share`` of all orders and
@@ -202,7 +196,6 @@ def main() -> int:
         q: {} for q in queries + ["connected_components"]}
     n_edges: dict[int, int] = {}
     loop_parts: dict[int, int] = {}
-    pr_iters: dict[int, list[float]] = {}
 
     for n in sizes:
         out_dir = Path(f"/tmp/spark_graft_stress_graph_{n}")
@@ -223,9 +216,6 @@ def main() -> int:
             dt = round(time.perf_counter() - t0, 2)
             timings[q][n] = dt
             print(f"  {q}: {dt}s")
-            if q == "pagerank_parts":
-                pr_iters[n] = list(QM.PAGERANK_ITER_TIMES)
-                print(f"    iters: {pr_iters[n]}")
             release_all()
         t0 = time.perf_counter()
         labels = connected_components_min_label(
@@ -252,19 +242,6 @@ def main() -> int:
                 if lo in t and hi in t},
             "tripwire": round(RATIO_SLACK_PER_EDGE_UNIT * er, 2),
         })
-    # per-block flatness within each run: the last materialization
-    # block must not cost more than 2.5x the first (re-shuffling edge
-    # lists grows per-block time; flat = the pre-partitioned layout is
-    # reused). With the r15 fused loop the default cadence yields ONE
-    # block, making this gate vacuous (ratio 1.0) — scaling is then
-    # covered by the tier-ratio gate above; set
-    # SPARK_GRAFT_PAGERANK_CHECKPOINT_EVERY=1 to re-probe per
-    # iteration.
-    iter_flat = {
-        str(n): (round(max(ts[-1], 0.01) / max(ts[0], 0.01), 2)
-                 if len(ts) > 1 else 1.0)
-        for n, ts in pr_iters.items()
-    }
     rec = {
         "sizes_orders": sizes,
         "n_edges": {str(k): v for k, v in n_edges.items()},
@@ -274,8 +251,6 @@ def main() -> int:
                         for q, t in timings.items()},
         "steps": steps,
         "ratio_slack_per_edge_unit": RATIO_SLACK_PER_EDGE_UNIT,
-        "pagerank_iter_sec": {str(k): v for k, v in pr_iters.items()},
-        "pagerank_iter_last_over_first": iter_flat,
     }
 
     bad = []
@@ -291,11 +266,6 @@ def main() -> int:
     if loop_parts[sizes[-1]] <= loop_parts[sizes[0]]:
         bad.append(f"loop partition sizing did not grow with edges: "
                    f"{loop_parts}")
-    for n, f in iter_flat.items():
-        if len(pr_iters[int(n)]) > 1 and f > 2.5 and max(
-                pr_iters[int(n)][0], pr_iters[int(n)][-1]) > 2.0:
-            bad.append(f"pagerank iterations grow within run at {n}: "
-                       f"{pr_iters[int(n)]}")
 
     # -------- planted-skew section (VERDICT r10 task 3) --------
     if not args.no_hub and len(sizes) >= 2:

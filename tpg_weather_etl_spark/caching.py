@@ -163,10 +163,11 @@ def mark() -> int:
 def live_since(marker: int) -> int:
     """How many registrations (tracked persists + result handles)
     made after ``marker`` are still live — the bench's cold-vs-warm
-    annotation (optimization r15, VERDICT r14 item 8): a query whose
-    window created live cache entries is the one that PAID a shared
-    family cache build in that sweep, so its recorded time is a cold
-    build+consume while later family members read warm."""
+    annotation (optimization r15, VERDICT r14 item 8). The count
+    includes every tracked persist the window left live, private
+    intermediates as well as shared family builds, so it bounds the
+    shared builds a query paid from above; it does not identify
+    them."""
     return (sum(1 for s in _SEQS if s > marker)
             + sum(1 for h in _HANDLES if h[0] > marker))
 

@@ -95,18 +95,7 @@ def connected_components_min_label(
         .distinct()
         .withColumn("cluster", F.col("doc"))
     )
-    # The localCheckpoint compiles each round to an RDD before AQE can
-    # coalesce, so the raw shuffle.partitions applies to every shuffle
-    # in the loop — scope it to the measured size for the duration
-    # (hundreds of near-empty tasks per round otherwise dominate
-    # wall-clock at test scale; at 100 TB ``parts`` is thousands).
-    spark = edges.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        labels, converged = _propagate(both, labels, max_iter)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    labels, converged = _propagate(both, labels, max_iter)
     both.unpersist()
     if not converged:
         # Under-convergence means labels that LOOK final but are not

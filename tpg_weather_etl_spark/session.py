@@ -51,6 +51,10 @@ _BASE_CONF: dict[str, str] = {
     # session tz is pinned UTC, so the two readings are value-identical)
     # and keeps strictly-typed functions (unix_micros & co.) working.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # The testdata parquet stores timestamps as INT64 TIMESTAMP(NANOS),
+    # which Spark rejects unless read as longs; sources/tables.read_table
+    # rebuilds the timestamp columns from them.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # ObjectHashAggregate (percentile/median/collect aggs) falls back to
     # sort-based execution after only 128 distinct keys by default;
     # high-cardinality grouped percentiles (A8) are ~30% faster hashing.
@@ -98,17 +102,20 @@ def get_spark(
 def apply_session_defaults(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable defaults to an externally-created session.
 
-    The correctness driver creates its own SparkSession; timezone and
-    AQE are runtime-settable, so we assert them here instead of trusting
-    the ambient config (hazard H1).
+    Callers of the ``__spark_entry__`` contract bring their own
+    SparkSession; timezone, AQE and the parquet timestamp readings are
+    runtime-settable, so we assert them here instead of trusting the
+    ambient config (hazard H1). Queries themselves never write session
+    conf.
     """
     for key in (
         "spark.sql.session.timeZone",
         "spark.sql.adaptive.enabled",
         "spark.sql.parquet.inferTimestampNTZ.enabled",
+        "spark.sql.legacy.parquet.nanosAsLong",
     ):
         try:
-            spark.conf.set(key, _BASE_CONF.get(key, "true") if key != "spark.sql.session.timeZone" else "UTC")
+            spark.conf.set(key, _BASE_CONF[key])
         except Exception:
             pass  # static conf on some builds; harmless
     return spark

@@ -2,12 +2,13 @@
 
 The driver's synthetic parquet stores timestamps as INT64
 TIMESTAMP(NANOS), which Spark's vectorized parquet reader rejects
-(PARQUET_TYPE_ILLEGAL). We read them via the legacy nanos-as-long
-escape hatch and rebuild proper TimestampType columns (truncating
-nanos → micros, exactly what DuckDB's reader does), so the rest of the
-engine sees ordinary timestamps and all pushdown/pruning still works:
-the long column is pruned/filtered at the scan, the conversion is a
-cheap projection.
+(PARQUET_TYPE_ILLEGAL). They arrive as longs through the legacy
+``spark.sql.legacy.parquet.nanosAsLong`` escape hatch, a session
+default (session.py), and this reader rebuilds proper TimestampType
+columns (truncating nanos → micros, exactly what DuckDB's reader
+does), so the rest of the engine sees ordinary timestamps and all
+pushdown/pruning still works: the long column is pruned/filtered at
+the scan, the conversion is a cheap projection.
 """
 
 from __future__ import annotations
@@ -26,10 +27,6 @@ TS_COLS: dict[str, list[str]] = {
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table, normalizing nano-timestamp columns."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     for c in TS_COLS.get(name, []):
         field = next((f for f in df.schema.fields if f.name == c), None)
