@@ -216,3 +216,85 @@ def test_by_stop_line_null_stop_name_falls_back_to_code(spark):
     out = build_features_by_stop_line(feats).collect()
     assert len(out) == 1
     assert out[0].stop_name == "8501"
+
+
+# W3 replay oracle: every rolling median of build_training_rows against
+# DuckDB's quantile_cont over the same RANGE frame. Three (line, stop)
+# groups over 35 days; group B has a 10-day gap (empty 7d frame, non-
+# empty 14/28d), group C plants a -3.5 half median (Spark's int cast
+# truncates to -3; a plain DuckDB CAST would round to -4).
+_MED_GROUPS = (("12", "8501"), ("12", "8502"), ("14", "8501"))
+_MED_DUCKDB = """
+SELECT line_text, stop_code, ts_event, d,
+  {meds}
+FROM ev
+"""
+_MED_EXPR = ("CAST(trunc(quantile_cont(d, 0.5) OVER (PARTITION BY line_text, "
+             "stop_code ORDER BY ts_event RANGE BETWEEN INTERVAL {n} DAYS "
+             "PRECEDING AND INTERVAL 1 MICROSECOND PRECEDING)) AS INTEGER)")
+
+
+def _nulls_last(row):
+    return tuple((v is None, 0 if v is None else v) for v in row)
+
+
+def _median_fixture():
+    import random
+    rng = random.Random(7)
+    rows = []
+    for g, (line, stop) in enumerate(_MED_GROUPS):
+        for day in range(35):
+            if g == 1 and 12 <= day < 22:
+                continue  # gap: 7d frames empty, 14/28d frames not
+            for _ in range(rng.randint(1, 4)):
+                ts = T0 + dt.timedelta(days=day, minutes=rng.choice(
+                    [0, 0, 10, 25, 40]))  # repeated minutes → tied ts
+                d = None if rng.random() < 0.15 else rng.randint(-300, 900)
+                rows.append((line, stop, ts, d))
+    # group C's first two events: the next day's frames hold exactly
+    # {-4, -3}, a -3.5 median
+    t = T0 - dt.timedelta(days=1)
+    rows += [("14", "8501", t, -4), ("14", "8501", t, -3),
+             ("14", "8501", t + dt.timedelta(hours=1), None)]
+    return rows
+
+
+def test_training_row_medians_match_duckdb_replay(spark):
+    import pandas as pd
+
+    rows = _median_fixture()
+    feats = spark.createDataFrame(
+        [(ts.date(), line, stop, "Gare", ts, d,
+          ts.replace(minute=ts.minute - ts.minute % 10), "GVE")
+         for line, stop, ts, d in rows],
+        "service_date date, line_text string, stop_code string,"
+        "stop_name string, sched_ts timestamp, depart_only_delay_sec int,"
+        "sched_bin timestamp, station_id string")
+    got = sorted((
+        (r.line_text, r.stop_id, r.ts_event, r.delay_depart_sec,
+         r.med_delay_7d_sec, r.med_delay_14d_sec, r.med_delay_28d_sec)
+        for r in build_training_rows(feats, _mk_weather(spark)).collect()),
+        key=_nulls_last)
+
+    con = duckdb.connect()
+    con.execute("SET TimeZone='UTC'")
+    ev = pd.DataFrame(rows, columns=["line_text", "stop_code", "ts_event", "d"])
+    ev["d"] = ev["d"].astype("Int64")
+    con.register("ev", ev)
+    want = con.execute(_MED_DUCKDB.format(meds=", ".join(
+        _MED_EXPR.format(n=n) for n in (7, 14, 28)))).fetchall()
+    assert len(got) == len(rows) == len(want)
+    assert got == sorted(want, key=_nulls_last)
+
+    # the fixture exercises what the semantics hinge on
+    raw7 = [r[0] for r in con.execute(
+        "SELECT quantile_cont(d, 0.5) OVER (PARTITION BY line_text, "
+        "stop_code ORDER BY ts_event RANGE BETWEEN INTERVAL 7 DAYS "
+        "PRECEDING AND INTERVAL 1 MICROSECOND PRECEDING) FROM ev").fetchall()]
+    assert -3.5 in raw7                                   # truncation
+    assert any(v is not None and v != int(v) for v in raw7)   # even count
+    assert any(v is not None and v == int(v) for v in raw7)   # odd count
+    assert any(r[4] is None and r[5] is not None for r in got)  # empty 7d
+    assert any(r[3] is None for r in got)                 # NULL delays
+    assert len({(r[0], r[1], r[2]) for r in got}) < len(got)  # tied ts
+    assert any(len({r[4], r[5], r[6]}) == 3 for r in got)  # frames differ
