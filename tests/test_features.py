@@ -298,3 +298,22 @@ def test_training_row_medians_match_duckdb_replay(spark):
     assert any(r[3] is None for r in got)                 # NULL delays
     assert len({(r[0], r[1], r[2]) for r in got}) < len(got)  # tied ts
     assert any(len({r[4], r[5], r[6]}) == 3 for r in got)  # frames differ
+
+
+def test_training_row_plan_has_explicit_width_and_no_percentile(spark):
+    # the (line, stop) shuffle names its width, so AQE cannot coalesce
+    # the window stage into one task; no medians left in Spark windows
+    import re
+
+    ev = _mk_events(spark, [_ev(minute=m, stop=s)
+                            for m in (0, 10) for s in ("8501", "8502")])
+    feats = build_features_events(ev, _mk_weather(spark), station_id="GVE")
+    tr = build_training_rows(feats, _mk_weather(spark))
+    assert len(tr.collect()) == 4
+    plan = tr._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]  # the final AQE plan
+    width = spark.sparkContext.defaultParallelism
+    assert len(re.findall(
+        rf"Exchange hashpartitioning\(line_text#\d+, stop_code#\d+, "
+        rf"{width}\), REPARTITION_BY_NUM", plan)) == 1
+    assert "percentile" not in plan.lower()

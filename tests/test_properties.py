@@ -707,3 +707,40 @@ def test_pair_jaccard_tau_prefilter_is_sound(spark, docs):
         (a, b) for a in range(len(docs)) for b in range(a + 1, len(docs))
         if len(docs[a] & docs[b]) / len(docs[a] | docs[b]) >= 0.5)
     assert [(a, b) for a, b, _, _ in with_tau] == want
+
+
+_HALF_DAY_US = 12 * 3600 * 1_000_000
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    events=st.lists(
+        st.tuples(st.integers(min_value=0, max_value=80),  # half-days
+                  st.one_of(st.none(),
+                            st.integers(min_value=-600, max_value=900))),
+        max_size=60),
+    days=st.sampled_from((7, 14, 28)),
+)
+# -3.5 must truncate to -3 (toward zero), not floor or round to -4
+@example(events=[(0, -4), (0, -3), (1, None), (2, 5)], days=7)
+def test_trailing_medians_equal_brute_force(events, days):
+    """training_row's sliding median equals, per row, the median of the
+    non-NULL delays in [t - days, t) truncated toward zero (NULL for an
+    empty frame): ties on t share a frame, boundaries are [incl, excl)."""
+    import statistics
+
+    import numpy as np
+
+    from tpg_weather_etl_spark.features.training_row import trailing_medians
+
+    events = sorted(events, key=lambda e: e[0])
+    keys = np.array([t * _HALF_DAY_US for t, _ in events], dtype="int64")
+    vals = np.array([np.nan if d is None else d for _, d in events],
+                    dtype="float64")
+    width = days * 2 * _HALF_DAY_US
+    want = []
+    for k in keys:
+        frame = [d for t, d in zip(keys, (d for _, d in events))
+                 if k - width <= t < k and d is not None]
+        want.append(int(statistics.median(frame)) if frame else None)
+    assert trailing_medians(keys, vals, width) == want
